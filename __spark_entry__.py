@@ -740,21 +740,20 @@ def q_tile_windows_for_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero added exchanges (asserted in tests/test_operators2.py)."""
     t = tiles_with_cells(load_tiles(spark, sf_dir))
     polys = load_polygons(spark, sf_dir).filter("is_rect").select(
-        "poly_id", grid.bbox_struct("xmin", "ymin", "xmax", "ymax").alias("pbox")
+        "poly_id", F.expr(grid.bbox_struct_sql("xmin", "ymin", "xmax", "ymax")).alias("pbox")
     )
-    pc = polys.withColumn("cell_id", F.explode(cells.cells_for_bbox(F.col("pbox"), LEVEL)))
+    pc = polys.withColumn("cell_id", F.expr(f"explode({cells.cells_for_bbox_sql('pbox', LEVEL)})"))
     j = t.join(F.broadcast(pc), "cell_id")
-    w = grid.window_for_bbox(F.col("grid"), F.col("pbox"))
-    j = j.withColumn("win", w).filter(~F.col("win")["oob"])
+    j = j.withColumn("win", F.expr(grid.window_for_bbox_sql("grid", "pbox"))).filter("NOT win.oob")
     # overlap anchor: NW cell of (tile bbox ∩ poly bbox) — defined for
     # every surviving (non-oob ⇒ overlapping) pair
-    anchor = cells.pack(
+    anchor = cells.pack_sql(
         LEVEL,
-        cells.cell_iy(F.least(F.col("bbox")["ymax"], F.col("pbox")["ymax"]), LEVEL),
-        cells.cell_ix(F.greatest(F.col("bbox")["xmin"], F.col("pbox")["xmin"]), LEVEL),
+        cells.cell_iy_sql("least(bbox.ymax, pbox.ymax)", LEVEL),
+        cells.cell_ix_sql("greatest(bbox.xmin, pbox.xmin)", LEVEL),
     )
     return (
-        j.filter(F.col("cell_id") == anchor)
+        j.filter(f"cell_id = {anchor}")
         .select(
             "image_id", "poly_id",
             F.col("win")["row_start"].alias("row_start"),
@@ -2371,8 +2370,8 @@ def q_events_cell_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events reinterpreted as points (FIXTURES.md §7b): deterministic
     x/y from value/user_id, counted per level-5 cell."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    x = F.col("value") - F.floor(F.col("value") / 360.0) * 360.0 - 180.0
-    y = (F.col("user_id") % 180).cast("double") - 90.0 + 0.5
+    x = "value - floor(value / 360.0D) * 360.0D - 180.0D"
+    y = "cast(user_id % 180 as double) - 90.0D + 0.5D"
     return (
         ev.withColumn("cell_id", cells.cell_id(x, y, 5))
         .groupBy("cell_id")

@@ -27,68 +27,168 @@ Correctness-critical transcriptions (cited against /root/reference):
 
 from __future__ import annotations
 
+import math
+import numbers
+
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 GRID_FIELDS = ("x_origin", "y_origin", "cell_width", "cell_height", "rows", "cols", "crs")
+_GRID_TYPES = ("double", "double", "double", "double", "int", "int", "string")
 
 
 def _col(c) -> Column:
     return c if isinstance(c, Column) else (F.col(c) if isinstance(c, str) else F.lit(c))
 
 
-def grid_struct(x_origin, y_origin, cell_width, cell_height, rows, cols, crs="EPSG:4326") -> Column:
-    """Build a grid-descriptor struct column from scalar/column inputs.
+# --- SQL text ------------------------------------------------------------------
+#
+# The grid and cell math is written once, as SQL text builders (``*_sql``:
+# SQL text in, SQL text out; a column name is valid SQL text). The public
+# Column functions are one ``F.expr`` over them: building a plan from text
+# costs one JVM call per expression, where the Column DSL costs one py4j
+# round trip (plus call-site capture) per operator -- ``cells.cell_id``
+# measured 19 ms as DSL and 0.22 ms as text, with the same optimized plan.
 
-    ``crs`` given as a string is treated as a LITERAL when it looks like a
-    CRS identifier ("EPSG:4326", proj4 with spaces) — otherwise a column
-    name, like every other argument.
-    """
+def _lambda_syntax(text: str) -> str:
+    """Rewrite Catalyst's rendering of a lambda, ``lambdafunction(body,
+    x, y)``, into SQL lambda syntax ``(x, y) -> body``."""
+    key = "lambdafunction("
+    i = text.find(key)
+    while i >= 0:
+        args, depth, quote, start, j = [], 0, None, i + len(key), i + len(key)
+        while True:
+            ch = text[j]
+            if quote:
+                if ch == "\\":
+                    j += 1
+                elif ch == quote:
+                    quote = None
+            elif ch in "'`":
+                quote = ch
+            elif ch == "(":
+                depth += 1
+            elif ch == ")":
+                if depth == 0:
+                    break
+                depth -= 1
+            elif ch == "," and depth == 0:
+                args.append(text[start:j].strip())
+                start = j + 1
+            j += 1
+        args.append(text[start:j].strip())
+        body, params = args[0], args[1:]
+        lam = f"{params[0]} -> {body}" if len(params) == 1 else f"({', '.join(params)}) -> {body}"
+        text = text[:i] + lam + text[j + 1:]
+        i = text.find(key)
+    return text
+
+
+def _sql(x) -> str:
+    """SQL text for a builder argument: ``str`` is SQL text already,
+    numbers become typed literals (doubles as ``1.0D`` -- a bare ``1.0``
+    parses as DECIMAL), and a Column is rendered by Catalyst (one JVM
+    call) -- pass column names or text where plan-building time matters."""
+    if isinstance(x, str):
+        return x
+    if isinstance(x, (bool, np.bool_)):
+        return "true" if x else "false"
+    if isinstance(x, numbers.Real):
+        if isinstance(x, numbers.Integral):
+            text = str(int(x))
+        elif math.isfinite(x):
+            text = f"{float(x)!r}D"
+        else:
+            return f"cast('{float(x)!r}' as double)"  # Spark casts 'nan'/'inf'/'-inf'
+        return f"({text})" if text.startswith("-") else text
+    if isinstance(x, Column):
+        from pyspark.sql import SparkSession
+
+        return _lambda_syntax(SparkSession.active()._jsparkSession.expression(x._jc).sql())
+    raise TypeError(f"no SQL text for {type(x).__name__}: {x!r}")
+
+
+def _str_lit(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _field(struct: str, name: str) -> str:
+    return f"({struct}).{name}"
+
+
+def grid_struct_sql(x_origin, y_origin, cell_width, cell_height, rows, cols, crs="EPSG:4326") -> str:
+    """Grid-descriptor struct. ``crs`` given as a string is a LITERAL when
+    it looks like a CRS identifier ("EPSG:4326", proj4 with spaces) --
+    otherwise a column name, like every other string argument."""
     if isinstance(crs, str) and (":" in crs or " " in crs):
-        crs = F.lit(crs)
-    return F.struct(
-        _col(x_origin).cast("double").alias("x_origin"),
-        _col(y_origin).cast("double").alias("y_origin"),
-        _col(cell_width).cast("double").alias("cell_width"),
-        _col(cell_height).cast("double").alias("cell_height"),
-        _col(rows).cast("int").alias("rows"),
-        _col(cols).cast("int").alias("cols"),
-        _col(crs).cast("string").alias("crs"),
-    )
+        crs = _str_lit(crs)
+    vals = (x_origin, y_origin, cell_width, cell_height, rows, cols, crs)
+    fields = ", ".join(f"cast({_sql(v)} as {t}) as {n}"
+                       for v, t, n in zip(vals, _GRID_TYPES, GRID_FIELDS))
+    return f"struct({fields})"
+
+
+def grid_struct(x_origin, y_origin, cell_width, cell_height, rows, cols, crs="EPSG:4326") -> Column:
+    """Build a grid-descriptor struct column from scalar/column inputs."""
+    return F.expr(grid_struct_sql(x_origin, y_origin, cell_width, cell_height, rows, cols, crs))
 
 
 # --- cell assignment (raster_grid.py:717-735) --------------------------------
+#
+# ``rint`` is IEEE round-half-even via Math.rint -- identical results to
+# bround(x, 0)/np.round/DuckDB round_even at scale 0, but pure FP: bround
+# constructs a java BigDecimal (through Double.toString!) per row and
+# dominated the join hot path in profiles.
 
-def _rint(c: Column) -> Column:
-    """IEEE round-half-even via Math.rint — identical results to
-    bround(x, 0)/np.round/DuckDB round_even at scale 0, but pure FP:
-    bround constructs a java BigDecimal (through Double.toString!) per
-    row and dominated the join hot path in profiles."""
-    return F.call_function("rint", c)
-
-
-def point_col(grid: Column, x) -> Column:
-    """Point x → fractional col via inverse center affine, banker's-rounded."""
-    return _rint((_col(x) - grid["x_origin"]) / grid["cell_width"] - 0.5).cast("long")
+def point_col_sql(grid: str, x: str) -> str:
+    """Point x -> col via inverse center affine, banker's-rounded."""
+    return (f"cast(rint((({x}) - {_field(grid, 'x_origin')}) / {_field(grid, 'cell_width')}"
+            f" - 0.5D) as bigint)")
 
 
-def point_row(grid: Column, y) -> Column:
-    return _rint((_col(y) - grid["y_origin"]) / grid["cell_height"] - 0.5).cast("long")
+def point_row_sql(grid: str, y: str) -> str:
+    return (f"cast(rint((({y}) - {_field(grid, 'y_origin')}) / {_field(grid, 'cell_height')}"
+            f" - 0.5D) as bigint)")
 
 
-def in_bounds(grid: Column, row, col) -> Column:
-    r, c = _col(row), _col(col)
-    return (r >= 0) & (r < grid["rows"]) & (c >= 0) & (c < grid["cols"])
+def in_bounds_sql(grid: str, row: str, col: str) -> str:
+    # explicit left-nesting: the SQL parser builds a BALANCED tree for a
+    # flat AND/OR chain, a different (if equivalent) plan
+    return (f"(((({row}) >= 0 AND ({row}) < {_field(grid, 'rows')})"
+            f" AND ({col}) >= 0) AND ({col}) < {_field(grid, 'cols')})")
+
+
+def point_col(grid, x) -> Column:
+    return F.expr(point_col_sql(_sql(grid), _sql(x)))
+
+
+def point_row(grid, y) -> Column:
+    return F.expr(point_row_sql(_sql(grid), _sql(y)))
+
+
+def in_bounds(grid, row, col) -> Column:
+    return F.expr(in_bounds_sql(_sql(grid), _sql(row), _sql(col)))
 
 
 # --- cell centers (affine_center × index, raster_grid.py:687-715) ------------
 
-def cell_center_x(grid: Column, col) -> Column:
-    return grid["x_origin"] + grid["cell_width"] * (_col(col).cast("double") + 0.5)
+def cell_center_x_sql(grid: str, col: str) -> str:
+    return (f"({_field(grid, 'x_origin')} + {_field(grid, 'cell_width')}"
+            f" * (cast({col} as double) + 0.5D))")
 
 
-def cell_center_y(grid: Column, row) -> Column:
-    return grid["y_origin"] + grid["cell_height"] * (_col(row).cast("double") + 0.5)
+def cell_center_y_sql(grid: str, row: str) -> str:
+    return (f"({_field(grid, 'y_origin')} + {_field(grid, 'cell_height')}"
+            f" * (cast({row} as double) + 0.5D))")
+
+
+def cell_center_x(grid, col) -> Column:
+    return F.expr(cell_center_x_sql(_sql(grid), _sql(col)))
+
+
+def cell_center_y(grid, row) -> Column:
+    return F.expr(cell_center_y_sql(_sql(grid), _sql(row)))
 
 
 # --- cell size / metric radius (raster_geometry.py:667-693, kdtree.py:27) -----
@@ -152,28 +252,31 @@ def meters_to_crs_units(meters: float, g: dict) -> float:
 
 # --- extent -------------------------------------------------------------------
 
-def grid_bbox(grid: Column) -> Column:
+def grid_bbox_sql(grid: str) -> str:
     """Grid extent as struct<xmin,ymin,xmax,ymax> (raster_grid.py:519-552)."""
-    return F.struct(
-        grid["x_origin"].alias("xmin"),
-        (grid["y_origin"] + grid["cell_height"] * grid["rows"].cast("double")).alias("ymin"),
-        (grid["x_origin"] + grid["cell_width"] * grid["cols"].cast("double")).alias("xmax"),
-        grid["y_origin"].alias("ymax"),
-    )
+    x0, y0 = _field(grid, "x_origin"), _field(grid, "y_origin")
+    return (f"struct({x0} as xmin, "
+            f"({y0} + {_field(grid, 'cell_height')} * cast({_field(grid, 'rows')} as double)) as ymin, "
+            f"({x0} + {_field(grid, 'cell_width')} * cast({_field(grid, 'cols')} as double)) as xmax, "
+            f"{y0} as ymax)")
+
+
+def bbox_struct_sql(xmin, ymin, xmax, ymax) -> str:
+    return (f"struct(cast({_sql(xmin)} as double) as xmin, cast({_sql(ymin)} as double) as ymin, "
+            f"cast({_sql(xmax)} as double) as xmax, cast({_sql(ymax)} as double) as ymax)")
+
+
+def grid_bbox(grid) -> Column:
+    return F.expr(grid_bbox_sql(_sql(grid)))
 
 
 def bbox_struct(xmin, ymin, xmax, ymax) -> Column:
-    return F.struct(
-        _col(xmin).cast("double").alias("xmin"),
-        _col(ymin).cast("double").alias("ymin"),
-        _col(xmax).cast("double").alias("xmax"),
-        _col(ymax).cast("double").alias("ymax"),
-    )
+    return F.expr(bbox_struct_sql(xmin, ymin, xmax, ymax))
 
 
 # --- window from bbox (raster_grid.py:737-815) --------------------------------
 
-def window_for_bbox(grid: Column, bbox: Column, buffer=None) -> Column:
+def window_for_bbox_sql(grid: str, bbox: str, buffer=None) -> str:
     """bbox → struct<row_start,col_start,row_end,col_end,oob>.
 
     Start from (xmin, ymax), end from (xmax, ymin) + 1, optional ±buffer,
@@ -183,24 +286,25 @@ def window_for_bbox(grid: Column, bbox: Column, buffer=None) -> Column:
     reference tests disjointness pre-buffer (raster_grid.py:790-801):
     we replicate: oob computed on unbuffered indices.
     """
-    row_start = point_row(grid, bbox["ymax"])
-    col_start = point_col(grid, bbox["xmin"])
-    row_end = point_row(grid, bbox["ymin"]) + 1
-    col_end = point_col(grid, bbox["xmax"]) + 1
-    rows = grid["rows"].cast("long")
-    cols = grid["cols"].cast("long")
-    oob = (row_end < 0) | (col_end < 0) | (row_start > rows) | (col_start > cols)
+    row_start = point_row_sql(grid, _field(bbox, "ymax"))
+    col_start = point_col_sql(grid, _field(bbox, "xmin"))
+    row_end = f"({point_row_sql(grid, _field(bbox, 'ymin'))} + 1)"
+    col_end = f"({point_col_sql(grid, _field(bbox, 'xmax'))} + 1)"
+    rows = f"cast({_field(grid, 'rows')} as bigint)"
+    cols = f"cast({_field(grid, 'cols')} as bigint)"
+    oob = (f"((({row_end} < 0 OR {col_end} < 0) OR {row_start} > {rows})"
+           f" OR {col_start} > {cols})")
     if buffer is not None:
-        b = _col(buffer).cast("long")
-        row_start, col_start = row_start - b, col_start - b
-        row_end, col_end = row_end + b, col_end + b
-    return F.struct(
-        F.greatest(row_start, F.lit(0).cast("long")).alias("row_start"),
-        F.greatest(col_start, F.lit(0).cast("long")).alias("col_start"),
-        F.least(row_end, rows).alias("row_end"),
-        F.least(col_end, cols).alias("col_end"),
-        oob.alias("oob"),
-    )
+        b = f"cast({_sql(buffer)} as bigint)"
+        row_start, col_start = f"({row_start} - {b})", f"({col_start} - {b})"
+        row_end, col_end = f"({row_end} + {b})", f"({col_end} + {b})"
+    return (f"struct(greatest({row_start}, 0L) as row_start, greatest({col_start}, 0L) as col_start, "
+            f"least({row_end}, {rows}) as row_end, least({col_end}, {cols}) as col_end, "
+            f"{oob} as oob)")
+
+
+def window_for_bbox(grid, bbox, buffer=None) -> Column:
+    return F.expr(window_for_bbox_sql(_sql(grid), _sql(bbox), buffer))
 
 
 # --- grid transforms (struct arithmetic, no data movement) --------------------

@@ -16,7 +16,7 @@ to a tile iff its banker's-rounded center-affine index lands inside
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Column
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rasters_spark import cells, fixtures, grid
@@ -71,7 +71,7 @@ def point_in_tile_join(
         src = tiles_cells if inline_payload else tiles_cells.drop(*payload_cols)
         index = tiles_with_cells(src, level)
         payload_src = None if inline_payload or not payload_cols else tiles_cells
-    pts = points.withColumn("cell_id", cells.cell_id(F.col("x"), F.col("y"), level))
+    pts = points.withColumn("cell_id", cells.cell_id("x", "y", level))
     if n_salts:
         index = index.withColumn(
             "join_key", cells.salted(F.col("cell_id"), n_salts) + cells.salt_of(F.col("image_id"), n_salts)
@@ -84,11 +84,9 @@ def point_in_tile_join(
         key = "cell_id"
     p = F.broadcast(pts) if broadcast_points else pts
     j = index.join(p.drop("crs"), key)
-    g = F.col("grid")
-    j = j.withColumn("prow", grid.point_row(g, F.col("y"))).withColumn(
-        "pcol", grid.point_col(g, F.col("x"))
-    )
-    j = j.filter(grid.in_bounds(g, F.col("prow"), F.col("pcol")))
+    j = j.withColumns({"prow": F.expr(grid.point_row_sql("grid", "y")),
+                       "pcol": F.expr(grid.point_col_sql("grid", "x"))})
+    j = j.filter(grid.in_bounds_sql("grid", "prow", "pcol"))
     if inline_payload:
         # reproduce the historical column order of the split shape:
         # join cols (payload last) — callers select by name anyway

@@ -33,18 +33,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
-
 from rasters_spark import grid
 
 
 def target_candidates(tiles: DataFrame, target: dict) -> DataFrame:
     """Per tile × overlapping target cell: (image_id, trow, tcol, tx, ty,
     prow, pcol) with in-bounds nearest source-pixel indices."""
-    tg = grid.grid_struct(**target)
-    w = grid.window_for_bbox(tg, F.col("bbox"))
-    sg = F.col("grid")
+    tg = grid.grid_struct_sql(**target)
     tcols = int(target["cols"])
     # Round-6: ONE Generate over a packed trow·cols+tcol key array
     # instead of two stacked sequence explodes. The window expressions
@@ -54,28 +49,20 @@ def target_candidates(tiles: DataFrame, target: dict) -> DataFrame:
     # the same whole-stage-codegen method) pushed the generated
     # consume method past janino's 64 KB limit on the composite/mosaic
     # pipelines and dropped the WHOLE stage to interpreted mode.
-    keys = F.flatten(F.transform(
-        F.sequence(F.col("win")["row_start"], F.col("win")["row_end"] - 1),
-        lambda r: F.transform(
-            F.sequence(F.col("win")["col_start"], F.col("win")["col_end"] - 1),
-            lambda c: r * tcols + c)))
+    keys = ("flatten(transform(sequence(win.row_start, win.row_end - 1), _r -> "
+            f"transform(sequence(win.col_start, win.col_end - 1), _c -> _r * {tcols} + _c)))")
     cand = (
-        tiles.withColumn("win", w)
-        .filter(
-            ~F.col("win")["oob"]
-            & (F.col("win")["row_end"] > F.col("win")["row_start"])
-            & (F.col("win")["col_end"] > F.col("win")["col_start"])
-        )
-        .withColumn("_tk", F.explode(keys))
+        tiles.withColumn("win", F.expr(grid.window_for_bbox_sql(tg, "bbox")))
+        .filter("(NOT win.oob AND win.row_end > win.row_start) AND win.col_end > win.col_start")
+        .withColumn("_tk", F.expr(f"explode({keys})"))
         .drop("win")
-        .withColumn("trow", F.expr(f"_tk div {tcols}"))
-        .withColumn("tcol", F.expr(f"_tk % {tcols}"))
+        .withColumns({"trow": F.expr(f"_tk div {tcols}"), "tcol": F.expr(f"_tk % {tcols}")})
         .drop("_tk")
-        .withColumn("tx", grid.cell_center_x(tg, F.col("tcol")))
-        .withColumn("ty", grid.cell_center_y(tg, F.col("trow")))
-        .withColumn("prow", grid.point_row(sg, F.col("ty")))
-        .withColumn("pcol", grid.point_col(sg, F.col("tx")))
-        .filter(grid.in_bounds(sg, F.col("prow"), F.col("pcol")))
+        .withColumns({"tx": F.expr(grid.cell_center_x_sql(tg, "tcol")),
+                      "ty": F.expr(grid.cell_center_y_sql(tg, "trow"))})
+        .withColumns({"prow": F.expr(grid.point_row_sql("grid", "ty")),
+                      "pcol": F.expr(grid.point_col_sql("grid", "tx"))})
+        .filter(grid.in_bounds_sql("grid", "prow", "pcol"))
     )
     return cand
 
@@ -244,34 +231,26 @@ def to_grid_conv(tiles: DataFrame, target: dict, resampling: str = "linear") -> 
     from rasters_spark.operators.sample import decode_slice, slice_pixel
 
     weights_fn, taps = CONV_KERNELS[resampling]
-    cand = target_candidates(tiles, target)
-    g = F.col("grid")
     d = (
-        cand
-        .withColumn("fc", (F.col("tx") - g["x_origin"]) / g["cell_width"] - F.lit(0.5))
-        .withColumn("fr", (F.col("ty") - g["y_origin"]) / g["cell_height"] - F.lit(0.5))
-        .withColumn("dc", F.expr("fc - floor(fc)"))
-        .withColumn("dr", F.expr("fr - floor(fr)"))
+        target_candidates(tiles, target)
+        .withColumns({"fc": F.expr("(tx - grid.x_origin) / grid.cell_width - 0.5D"),
+                      "fr": F.expr("(ty - grid.y_origin) / grid.cell_height - 0.5D")})
+        .withColumns({"dc": F.expr("fc - floor(fc)"), "dr": F.expr("fr - floor(fr)")})
+        .withColumns({
+            f"{ax}_{_lbl(i)}": F.expr(f"least(greatest(cast(floor({f}) as bigint) + ({i}), 0), {n} - 1)")
+            for i in taps for ax, f, n in (("rr", "fr", "h"), ("cc", "fc", "w"))})
     )
-    for i in taps:
-        d = d.withColumn(
-            f"rr_{_lbl(i)}",
-            F.expr(f"least(greatest(cast(floor(fr) as bigint) + ({i}), 0), h - 1)"))
-        d = d.withColumn(
-            f"cc_{_lbl(i)}",
-            F.expr(f"least(greatest(cast(floor(fc) as bigint) + ({i}), 0), w - 1)"))
     # NOTE (round-6, measured): the taps deliberately stay on the Arrow
     # slice kernel — the pure-JVM hex/conv bit decode that now powers
     # sample_nearest was 3x SLOWER here (interleaved A/B, 16-tap cubic
     # 6.5 s vs 2.3 s): 16 conv chains per row lose to ONE fused
     # ArrowEvalPython that decodes every tap in a single round trip.
-    for i in taps:
-        for j in taps:
-            d = d.withColumn(
-                f"v_{_lbl(i)}_{_lbl(j)}",
-                decode_slice(slice_pixel(f"rr_{_lbl(i)}", f"cc_{_lbl(j)}"), F.col("fmt")))
-    d = d.withColumn("value", F.expr(conv_blend_sql(weights_fn, taps)))
-    return d.select("image_id", "trow", "tcol", "value")
+    fmt = F.col("fmt")
+    d = d.withColumns({
+        f"v_{_lbl(i)}_{_lbl(j)}": decode_slice(slice_pixel(f"rr_{_lbl(i)}", f"cc_{_lbl(j)}"), fmt)
+        for i in taps for j in taps})
+    return d.select("image_id", "trow", "tcol",
+                    F.expr(conv_blend_sql(weights_fn, taps)).alias("value"))
 
 
 def to_grid_bilinear(tiles: DataFrame, target: dict) -> DataFrame:
@@ -328,6 +307,9 @@ def _segment_stat(key: np.ndarray, val: np.ndarray, stat: str):
     return keys, out, counts
 
 
+_PIXEL_BYTES = {"raw": 4, "i32": 4, "b1": 1, "q8": 1}
+
+
 def _batch_cell_values(pdf: pd.DataFrame):
     """Vectorized source-pixel → target-cell routing for a WHOLE Arrow
     batch (round-6: the former per-tile Python loop — meshgrid +
@@ -351,6 +333,19 @@ def _batch_cell_values(pdf: pd.DataFrame):
     hs = pdf["h"].to_numpy().astype(np.int64)
     fmts = pdf["fmt"].to_numpy()
     blobs = pdf["bytes"].to_numpy()
+    ids = pdf["image_id"].to_numpy()
+
+    def pixels(i: int, w: int, h: int) -> bytes:
+        """Tile ``i``'s pixel bytes, exactly the w·h pixels its format
+        needs: a trailing excess is cut so it cannot shift the next tile
+        in the concatenated buffer, and a short blob fails naming the tile."""
+        need = h * w * _PIXEL_BYTES.get(fmts[i], 1) + (codec.HEADER_Q8 if fmts[i] == "q8" else 0)
+        b = blobs[i]
+        if len(b) < need:
+            raise ValueError(f"tile {ids[i]!r}: {fmts[i]} blob has {len(b)} bytes, "
+                             f"a {w}x{h} tile needs {need}")
+        return b[:need]
+
     x0s = pdf["x_origin"].to_numpy().astype(np.float64)
     y0s = pdf["y_origin"].to_numpy().astype(np.float64)
     cws = pdf["cell_width"].to_numpy().astype(np.float64)
@@ -371,7 +366,7 @@ def _batch_cell_values(pdf: pd.DataFrame):
             sel = np.flatnonzero(fsub == fmt)
             if len(sel) == 0:
                 continue
-            cat = b"".join(blobs[pos[sel]])
+            cat = b"".join(pixels(i, w, h) for i in pos[sel])
             if fmt == "raw":
                 V[sel] = np.frombuffer(cat, dtype="<f4").reshape(len(sel), h * w)
             elif fmt == "i32":
@@ -383,7 +378,7 @@ def _batch_cell_values(pdf: pd.DataFrame):
                 V[sel] = np.frombuffer(cat, dtype=np.uint8).reshape(len(sel), h * w)
         qsel = np.flatnonzero(~np.isin(fsub, ("raw", "i32", "b1")))
         for q in qsel:
-            V[q] = codec.decode_tile(blobs[pos[q]], w, h, fmts[pos[q]]).ravel()
+            V[q] = codec.decode_tile(pixels(pos[q], w, h), w, h, fmts[pos[q]]).ravel()
         # per-tile pixel-center coords -> target indices (banker's round,
         # the exact npref.index_point expression order)
         px = x0s[pos, None] + cws[pos, None] * (np.arange(w) + 0.5)          # (m, w)
@@ -585,7 +580,6 @@ def to_grid_average(tiles: DataFrame, target: dict) -> DataFrame:
     assigned to the target cell containing its center; per (tile,
     target cell) mean. Runs as one Arrow pass per tile (vectorized
     binning, no pixel explosion through the shuffle)."""
-    tg = grid.grid_struct(**target)
     t = tiles.select(
         "image_id", "bytes", "w", "h", "fmt",
         "x_origin", "y_origin", "cell_width", "cell_height",
@@ -659,17 +653,17 @@ def reproject(tiles: DataFrame, dst_crs: str, cell_size_m: float = 2000.0) -> Da
     rows = int(np.ceil((y0 - (ext.ymin - cell_size_m / 2)) / cell_size_m))
     tg = dict(x_origin=x0, y_origin=y0, cell_width=cell_size_m, cell_height=-cell_size_m,
               rows=rows, cols=cols, crs=dst_crs)
-    g = grid.grid_struct(**tg)
+    g = grid.grid_struct_sql(**tg)
     assigned = (
-        utm.withColumn("trow", grid.point_row(g, F.col("y_t")))
-        .withColumn("tcol", grid.point_col(g, F.col("x_t")))
-        .filter(grid.in_bounds(g, F.col("trow"), F.col("tcol")))
+        utm.withColumns({"trow": F.expr(grid.point_row_sql(g, "y_t")),
+                         "tcol": F.expr(grid.point_col_sql(g, "x_t"))})
+        .filter(grid.in_bounds_sql(g, "trow", "tcol"))
     )
     out = assigned.groupBy("trow", "tcol").agg(
         F.min_by("value", F.struct("image_id", "prow", "pcol")).alias("value"),
         F.count("*").alias("n_sources"),
     )
-    return out.withColumn("grid", g)
+    return out.withColumn("grid", F.expr(g))
 
 
 def build_resample_index(tiles: DataFrame, target: dict, table) -> dict:
@@ -696,10 +690,17 @@ def resample_with_index(spark, tiles: DataFrame, table) -> DataFrame:
 def _coarse_key(fine_grid: dict, coarse_grid: dict):
     """Fine cell center → containing coarse cell indices: pure SQL
     (banker's-rounded inverse center affine, like every cell lookup)."""
-    cg = grid.grid_struct(**coarse_grid)
-    fx = fine_grid["x_origin"] + fine_grid["cell_width"] * (F.col("col").cast("double") + 0.5)
-    fy = fine_grid["y_origin"] + fine_grid["cell_height"] * (F.col("row").cast("double") + 0.5)
-    return grid.point_row(cg, fy).alias("crow"), grid.point_col(cg, fx).alias("ccol")
+    return (F.expr(_coarse_key_sql(fine_grid, coarse_grid, "row")).alias("crow"),
+            F.expr(_coarse_key_sql(fine_grid, coarse_grid, "col")).alias("ccol"))
+
+
+def _coarse_key_sql(fine_grid: dict, coarse_grid: dict, axis: str) -> str:
+    """The coarse ``axis`` ('row'/'col') index of the fine cell center at
+    the ``row``/``col`` columns."""
+    fg, cg = grid.grid_struct_sql(**fine_grid), grid.grid_struct_sql(**coarse_grid)
+    if axis == "row":
+        return grid.point_row_sql(cg, grid.cell_center_y_sql(fg, "row"))
+    return grid.point_col_sql(cg, grid.cell_center_x_sql(fg, "col"))
 
 
 def bias_correct(coarse: DataFrame, fine: DataFrame,
@@ -776,29 +777,20 @@ def linear_downscale(coarse: DataFrame, fine: DataFrame,
         return f.select(*out_cols)
     # gap-fill lattice: every fine cell whose center maps into a coarse
     # cell with data; left-join the corrected fine and coalesce
-    fg = grid.grid_struct(**fine_grid)
-    cg_d = coarse_grid
-    cbox = grid.bbox_struct(
-        F.lit(cg_d["x_origin"]) + F.lit(cg_d["cell_width"]) * F.col("ccol").cast("double"),
-        F.lit(cg_d["y_origin"]) + F.lit(cg_d["cell_height"]) * (F.col("crow").cast("double") + 1.0),
-        F.lit(cg_d["x_origin"]) + F.lit(cg_d["cell_width"]) * (F.col("ccol").cast("double") + 1.0),
-        F.lit(cg_d["y_origin"]) + F.lit(cg_d["cell_height"]) * F.col("crow").cast("double"),
-    )
-    w = grid.window_for_bbox(fg, cbox)
+    x0, y0, cw, ch = (grid._sql(float(coarse_grid[k]))
+                      for k in ("x_origin", "y_origin", "cell_width", "cell_height"))
+    cbox = grid.bbox_struct_sql(
+        f"{x0} + {cw} * cast(ccol as double)", f"{y0} + {ch} * (cast(crow as double) + 1.0D)",
+        f"{x0} + {cw} * (cast(ccol as double) + 1.0D)", f"{y0} + {ch} * cast(crow as double)")
     lat = (
-        c.withColumn("win", w)
-        .filter(~F.col("win")["oob"]
-                & (F.col("win")["row_end"] > F.col("win")["row_start"])
-                & (F.col("win")["col_end"] > F.col("win")["col_start"]))
-        .withColumn("row", F.explode(F.sequence(F.col("win")["row_start"], F.col("win")["row_end"] - 1)))
-        .withColumn("col", F.explode(F.sequence(F.col("win")["col_start"], F.col("win")["col_end"] - 1)))
+        c.withColumn("win", F.expr(grid.window_for_bbox_sql(grid.grid_struct_sql(**fine_grid), cbox)))
+        .filter("(NOT win.oob AND win.row_end > win.row_start) AND win.col_end > win.col_start")
+        .withColumn("row", F.expr("explode(sequence(win.row_start, win.row_end - 1))"))
+        .withColumn("col", F.expr("explode(sequence(win.col_start, win.col_end - 1))"))
+        .filter(f"{_coarse_key_sql(fine_grid, coarse_grid, 'row')} = crow"
+                f" AND {_coarse_key_sql(fine_grid, coarse_grid, 'col')} = ccol")
+        .select("row", "col", "vc")
     )
-    fx = F.lit(fine_grid["x_origin"]) + F.lit(fine_grid["cell_width"]) * (F.col("col").cast("double") + 0.5)
-    fy = F.lit(fine_grid["y_origin"]) + F.lit(fine_grid["cell_height"]) * (F.col("row").cast("double") + 0.5)
-    cgs = grid.grid_struct(**coarse_grid)
-    lat = lat.filter(
-        (grid.point_row(cgs, fy) == F.col("crow")) & (grid.point_col(cgs, fx) == F.col("ccol"))
-    ).select("row", "col", "vc")
     filled = (
         lat.join(f.select("row", "col", "value", "scale", "bias"), ["row", "col"], "left")
         .select("row", "col",

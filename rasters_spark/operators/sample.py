@@ -189,12 +189,10 @@ def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
     val_expr = _case(val_of)
     need_hdr = "q8" in fmts
     if need_hdr:
-        if "_q8hdr_vmin" in df.columns:
-            df = (df.withColumn(vminf, F.col("_q8hdr_vmin"))
-                    .withColumn(vmaxf, F.col("_q8hdr_vmax")))
-        else:
-            df = (df.withColumn(vminf, F.expr(_q8_header_float_sql(1)))
-                    .withColumn(vmaxf, F.expr(_q8_header_float_sql(5))))
+        df = df.withColumns({vminf: F.expr(_q8_header_float_sql(1)),
+                             vmaxf: F.expr(_q8_header_float_sql(5))})
+    # the bits column stays its own projection step: merged into the
+    # header step it moved the q8-header projection in the optimized plan
     return (df.withColumn(b, F.expr(bits_expr))
               .withColumn(value_name, F.expr(val_expr))
               .drop(*([b, vminf, vmaxf] if need_hdr else [b])))
@@ -210,16 +208,10 @@ def slice_pixel(row_col: str, col_col: str):
     to Python instead of the whole tile blob (CLAUDE.md: never carry
     bytes through join fanout)."""
     off = f"({row_col}*w+{col_col})"
-    return F.when(
-        F.col("fmt").isin("raw", "i32"),
-        F.expr(f"substring(bytes, cast(4*{off} as int) + 1, 4)"),
-    ).when(
-        F.col("fmt") == "b1",
-        F.expr(f"substring(bytes, cast({off} as int) + 1, 1)"),
-    ).otherwise(
-        F.concat(F.expr("substring(bytes, 1, 8)"),
-                 F.expr(f"substring(bytes, cast({off} as int) + 9, 1)"))
-    )
+    return F.expr(
+        f"CASE WHEN fmt IN ('raw', 'i32') THEN substring(bytes, cast(4*{off} as int) + 1, 4) "
+        f"WHEN fmt = 'b1' THEN substring(bytes, cast({off} as int) + 1, 1) "
+        f"ELSE concat(substring(bytes, 1, 8), substring(bytes, cast({off} as int) + 9, 1)) END")
 
 
 def decode_slice(sl, fmt):

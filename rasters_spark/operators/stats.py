@@ -259,11 +259,9 @@ def zonal_stats(tiles: DataFrame, polygons: DataFrame, level: int | None = None)
 
     partial = payload.mapInPandas(run, schema=ZONAL_PARTIAL_SCHEMA)
     return (partial.groupBy("poly_id").agg(
-        F.sum("n_valid").alias("n_valid"),
-        F.sum("vsum").alias("vsum"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"))
-        .withColumn("vmean", F.col("vsum") / F.col("n_valid")))
+        F.expr("sum(n_valid) AS n_valid"), F.expr("sum(vsum) AS vsum"),
+        F.expr("min(vmin) AS vmin"), F.expr("max(vmax) AS vmax"))
+        .withColumn("vmean", F.expr("vsum / n_valid")))
 
 
 def histogram(tiles: DataFrame, lo: float, hi: float, nbins: int) -> DataFrame:

@@ -66,10 +66,10 @@ def swath_index_point(swath: DataFrame, points: DataFrame, level: int = 10) -> D
     via cell-bucket candidates + min_by distance; ring 1 so the true NN
     in an adjacent bucket is not missed. → (point_id, swath_id, row,
     col, dist)."""
-    sw = swath.withColumn("cell", cells.cell_id(F.col("x"), F.col("y"), level))
-    pts = points.select(
-        "point_id", F.col("x").alias("qx"), F.col("y").alias("qy"),
-        F.explode(cells.ring_cells(cells.cell_id(F.col("x"), F.col("y"), level), level, 1)).alias("cell"),
+    sw = swath.withColumn("cell", cells.cell_id("x", "y", level))
+    pts = points.selectExpr(
+        "point_id", "x AS qx", "y AS qy",
+        f"explode({cells.ring_cells_sql(cells.cell_id_sql('x', 'y', level), level, 1)}) AS cell",
     )
     dx = F.col("x") - F.col("qx")
     dy = F.col("y") - F.col("qy")
@@ -109,14 +109,14 @@ def swath_to_grid_twohop(swath: DataFrame, target: dict, own_cell_size: float) -
     og = swath_own_grid(swath, own_cell_size)
     hop1 = swath_to_grid_nn(swath, og, radius=2.0 * own_cell_size).select(
         "swath_id", F.col("trow").alias("orow"), F.col("tcol").alias("ocol"), "value")
-    g1 = grid.grid_struct(**og)
-    tg = grid.grid_struct(**target)
-    cx = grid.cell_center_x(g1, F.col("ocol"))
-    cy = grid.cell_center_y(g1, F.col("orow"))
+    g1 = grid.grid_struct_sql(**og)
+    tg = grid.grid_struct_sql(**target)
+    cx = grid.cell_center_x_sql(g1, "ocol")
+    cy = grid.cell_center_y_sql(g1, "orow")
     hop2 = (
-        hop1.withColumn("trow", grid.point_row(tg, cy))
-        .withColumn("tcol", grid.point_col(tg, cx))
-        .filter(grid.in_bounds(tg, F.col("trow"), F.col("tcol")))
+        hop1.withColumns({"trow": F.expr(grid.point_row_sql(tg, cy)),
+                          "tcol": F.expr(grid.point_col_sql(tg, cx))})
+        .filter(grid.in_bounds_sql(tg, "trow", "tcol"))
         .groupBy("swath_id", "trow", "tcol")
         .agg((F.sum("value") / F.count("value")).alias("value"), F.count("value").alias("n"))
     )
@@ -205,7 +205,7 @@ def swath_to_grid_nn(swath: DataFrame, target: dict, radius: float | None = None
     pixel nearest to the cell center, drop misses beyond ``radius``
     (reference default 2×max cell size, kdtree.py:27,168-179).
     → (swath_id, trow, tcol, value, dist)."""
-    tg = grid.grid_struct(**target)
+    tg = grid.grid_struct_sql(**target)
     if radius is None:
         # reference default: 2.0 × max cell_size_meters over the two
         # geometries (kdtree.py:27,168-179); swath source cell size is
@@ -214,11 +214,11 @@ def swath_to_grid_nn(swath: DataFrame, target: dict, radius: float | None = None
         radius = grid.meters_to_crs_units(
             grid.kdtree_radius_meters(None, target), target)
     s = (
-        swath.withColumn("trow", grid.point_row(tg, F.col("y")))
-        .withColumn("tcol", grid.point_col(tg, F.col("x")))
-        .filter(grid.in_bounds(tg, F.col("trow"), F.col("tcol")))
-        .withColumn("cx", grid.cell_center_x(tg, F.col("tcol")))
-        .withColumn("cy", grid.cell_center_y(tg, F.col("trow")))
+        swath.withColumns({"trow": F.expr(grid.point_row_sql(tg, "y")),
+                           "tcol": F.expr(grid.point_col_sql(tg, "x"))})
+        .filter(grid.in_bounds_sql(tg, "trow", "tcol"))
+        .withColumns({"cx": F.expr(grid.cell_center_x_sql(tg, "tcol")),
+                      "cy": F.expr(grid.cell_center_y_sql(tg, "trow"))})
     )
     dx = F.col("x") - F.col("cx")
     dy = F.col("y") - F.col("cy")

@@ -19,8 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from rasters_spark import cells, fixtures, grid
+from rasters_spark import fixtures
 from rasters_spark.tableio import TableIO
+from rasters_spark.tiles import tiles_with_cells, with_grid
 
 TILE_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType()),
@@ -41,10 +42,7 @@ TILE_SCHEMA = T.StructType([
 def index_batch(df: DataFrame, level: int = fixtures.CELL_LEVEL) -> DataFrame:
     """The stateless per-batch stage: derive grid/bbox, register cells —
     identical code path to the batch engine (tiles.py)."""
-    g = grid.grid_struct("x_origin", "y_origin", "cell_width", "cell_height",
-                         F.col("h"), F.col("w"), "crs")
-    out = df.withColumn("grid", g).withColumn("bbox", grid.grid_bbox(F.col("grid")))
-    out = out.withColumn("cell_id", F.explode(cells.cells_for_bbox(F.col("bbox"), level)))
+    out = tiles_with_cells(with_grid(df), level)
     return out.select("image_id", "cell_id", "caption", "phash",
                       "x_origin", "y_origin", "cell_width", "cell_height", "w", "h")
 
@@ -403,7 +401,6 @@ def stream_composite_available_now(
     production shape for a rolling best-pixel mosaic over an imagery
     firehose: new scenes only ever RAISE cells, nothing is recomputed."""
     from rasters_spark.operators import resample
-    from rasters_spark.tiles import with_grid
 
     schema = spark.read.parquet(tiles_path).schema
     ts = (spark.readStream.schema(schema)

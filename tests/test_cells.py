@@ -139,3 +139,60 @@ def test_save_xyz_tiles_renders_decodable_pyramid(spark, sf_dir):
     # stats core agrees with the sink's group count
     stats_n = xyzfn.xyz_pyramid_stats(t, z=4).count()
     assert stats_n == len(res)
+
+
+def _bbox_frame(spark, boxes):
+    return spark.createDataFrame(
+        [(i, *map(float, b)) for i, b in enumerate(boxes)],
+        "id int, xmin double, ymin double, xmax double, ymax double",
+    ).withColumn("bbox", F.expr("struct(xmin, ymin, xmax, ymax)"))
+
+
+def _property_boxes(rng, n):
+    """Random bboxes plus the edge families: full wrap width and
+    pole-adjacent (clamped) extents."""
+    x = np.sort(rng.uniform(-180, 180, (n, 2)), axis=1)
+    y = np.sort(rng.uniform(-90, 90, (n, 2)), axis=1)
+    rand = np.column_stack([x[:, 0], y[:, 0], x[:, 1], y[:, 1]])
+    wrap = [(-180.0, -10.0, 180.0, 10.0), (-179.9, 0.0, 179.9, 1.0), (-180.0, -90.0, 180.0, 90.0)]
+    pole = [(10.0, 89.0, 12.0, 90.0), (-5.0, -90.0, 5.0, -88.5), (170.0, 88.0, 180.0, 90.0)]
+    return [tuple(b) for b in rand] + wrap + pole
+
+
+def test_cells_for_bbox_matches_numpy_property(spark):
+    boxes = _property_boxes(np.random.default_rng(31), 200)
+    for level in (3, 7):
+        got = {r.id: sorted(r.a) for r in _bbox_frame(spark, boxes).select(
+            "id", cells.cells_for_bbox("bbox", level).alias("a")).collect()}
+        for i, b in enumerate(boxes):
+            assert got[i] == sorted(npref.np_cells_for_bbox(*b, level)), (level, b)
+
+
+def test_ring_cells_bbox_is_union_of_cell_rings_property(spark):
+    """ring_cells_bbox == the union of ring_cells over cells_for_bbox,
+    without duplicates, for random, full-wrap-width and pole bboxes."""
+    boxes = _property_boxes(np.random.default_rng(32), 200)
+    for level, ring in ((3, 1), (5, 2), (7, 1)):
+        union = (f"array_sort(array_distinct(flatten(transform("
+                 f"{cells.cells_for_bbox_sql('bbox', level)}, "
+                 f"_c -> {cells.ring_cells_sql('_c', level, ring)}))))")
+        rows = _bbox_frame(spark, boxes).select(
+            "id", cells.ring_cells_bbox("bbox", level, ring).alias("direct"),
+            F.expr(union).alias("union")).collect()
+        for r in rows:
+            assert len(r.direct) == len(set(r.direct)), (level, ring, boxes[r.id])
+            assert sorted(r.direct) == r.union, (level, ring, boxes[r.id])
+
+
+def test_wrapped_bbox_registers_both_seam_sides(spark):
+    """xmin > xmax is the antimeridian convention: cells_for_bbox and
+    ring_cells_bbox take unwrapped bboxes only (Spark sequence(a, b)
+    counts down when a > b), and cells_for_bbox_am is the pre-split --
+    the union of the [xmin, 180] and [-180, xmax] halves."""
+    boxes = [(179.2, 10.0, -179.5, 11.0), (170.0, -5.0, -170.0, 5.0), (100.0, 80.0, -100.0, 90.0)]
+    got = {r.id: sorted(r.a) for r in _bbox_frame(spark, boxes).select(
+        "id", cells.cells_for_bbox_am("bbox", LEVEL).alias("a")).collect()}
+    for i, (x0, y0, x1, y1) in enumerate(boxes):
+        want = set(npref.np_cells_for_bbox(x0, y0, 180.0, y1, LEVEL))
+        want |= set(npref.np_cells_for_bbox(-180.0, y0, x1, y1, LEVEL))
+        assert got[i] == sorted(want)
