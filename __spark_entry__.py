@@ -799,9 +799,11 @@ RASTERIZE_TARGET = dict(
 
 
 def q_points_in_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact PIP join (ray-cast kernel); rect subset so the DuckDB oracle
-    can assert the identical half-open bbox semantics. Convex/concave
-    rings are pinned by tests/test_joins.py instead."""
+    """Exact PIP join (broadcast cell equi-join, then the even-odd
+    ray-cast as one SQL filter, ``joins.ray_cast_inside_sql``); rect
+    subset so the DuckDB oracle can assert the identical half-open bbox
+    semantics. Convex/concave rings are pinned by tests/test_joins.py
+    instead (the SQL ray-cast equals the numpy one row for row)."""
     pts = load_points(spark, sf_dir)
     polys = load_polygons(spark, sf_dir).filter("is_rect")
     return joins.points_in_polygons(pts, polys).select("point_id", "poly_id", "x", "y", "burn_value")

@@ -12,9 +12,11 @@ Reference semantics transcribed:
 
 Spark shape: the theta-join is reduced to an equi-join on cell id
 (polygon footprints exploded over covered cells, points/cells hashed to
-one cell), with the exact ray-cast refinement running as a grouped
-Arrow kernel — ONE numpy evaluation of all candidate points against
-each polygon ring (applyInPandas by poly_id), zero per-row Python.
+one cell), and the exact ray-cast refinement is one SQL expression
+(``ray_cast_inside_sql``) filtering the candidates in the JVM: no Python
+worker, no refinement shuffle. The numpy ``ray_cast_inside`` is its
+bit-identical twin for kernels that already hold decoded pixels (the
+zonal family).
 
 PIP boundary semantics: even-odd ray casting with half-open edges — for
 an axis-aligned rectangle this is exactly ``xmin ≤ x < xmax ∧
@@ -24,7 +26,6 @@ ymin ≤ y < ymax``, which is what the DuckDB oracle asserts.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,6 +54,24 @@ def ray_cast_inside(px: np.ndarray, py: np.ndarray, rx: np.ndarray, ry: np.ndarr
     return inside
 
 
+def ray_cast_inside_sql(px: str, py: str, ring: str) -> str:
+    """SQL text of ``ray_cast_inside`` for one point against one ring
+    (``array<struct<x,y>>``): a boolean expression.
+
+    The same IEEE operations in the same order as the numpy kernel —
+    ``(x2 - x1) * (py - y1) / (y2 - y1) + x1``, each rounded, no FMA in
+    either engine — so both agree bit for bit. The CASE keeps the
+    division off horizontal edges (the numpy ``continue``; ANSI mode
+    raises on x/0.0), and a ring of fewer than 2 vertices is outside
+    (``sequence(1, 0)`` would count DOWN)."""
+    a, b = f"{ring}[_rc_i - 1]", f"{ring}[_rc_i]"
+    crossing = (
+        f"CASE WHEN ({a}.y > {py}) != ({b}.y > {py}) "
+        f"THEN {px} < ({b}.x - {a}.x) * ({py} - {a}.y) / ({b}.y - {a}.y) + {a}.x ELSE false END")
+    return (f"CASE WHEN size({ring}) < 2 THEN false ELSE aggregate(sequence(1, size({ring}) - 1), "
+            f"false, (_rc_acc, _rc_i) -> _rc_acc != {crossing}) END")
+
+
 def points_in_polygons(
     points: DataFrame,
     polygons: DataFrame,
@@ -63,48 +82,38 @@ def points_in_polygons(
 
     ``bbox_only=True`` reproduces the swath bbox-subset quirk
     (raster_geolocation.py:145-172): containment in the geometry's bbox.
+
+    A wrapped (antimeridian) polygon's ring in raw coordinates describes
+    the COMPLEMENT region, so its ring and its candidate points are
+    shifted into continuous 0..360 space before the ray-cast (the
+    reference's RasterGeolocation.resize shift trick,
+    raster_geolocation.py:319-330, applied to PIP). The ring shifts once
+    on the polygon side, before the broadcast.
+
+    MultiPolygon inputs carry a ``part`` column (one row per member
+    ring, wrap_geometry.py:76-79); refinement is per row, so membership
+    in ANY part is the caller's distinct over (point, poly).
     """
     pbox = grid.bbox_struct_sql("xmin", "ymin", "xmax", "ymax")
     # antimeridian-aware registration: wrapped bboxes (xmin > xmax, the
     # reference's crossing convention) register both seam sides
-    polys = polygons.drop("crs").withColumn(
-        "pcell", F.expr(f"explode({cells.cells_for_bbox_am_sql(pbox, level)})"))
+    polys = polygons.drop("crs").withColumns({
+        "ring": F.expr(
+            "CASE WHEN xmin > xmax THEN transform(ring, v -> named_struct("
+            "'x', CASE WHEN v.x < 0 THEN v.x + 360.0D ELSE v.x END, 'y', v.y)) ELSE ring END"),
+        "pcell": F.expr(f"explode({cells.cells_for_bbox_am_sql(pbox, level)})"),
+    })
     pts = points.drop("crs").withColumn("pcell", cells.cell_id("x", "y", level))
     cand = pts.join(F.broadcast(polys), "pcell")
-    # bbox prefilter (cheap SQL residual before the exact kernel);
+    # bbox prefilter (cheap SQL residual before the exact ray-cast);
     # wrapped x-range = the OR of the two seam sides
     cand = cand.filter(
         "((CASE WHEN xmin > xmax THEN x >= xmin OR x < xmax ELSE x >= xmin AND x < xmax END)"
         " AND y >= ymin) AND y < ymax")
-    if bbox_only:
-        return cand.drop("ring", "is_rect", "pcell")
-
-    out_schema = cand.drop("ring", "is_rect", "pcell").schema
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rx, ry = _ring_xy(pdf["ring"].iloc[0])
-        px = pdf["x"].to_numpy()
-        if pdf["xmin"].iloc[0] > pdf["xmax"].iloc[0]:
-            # wrapped (antimeridian) polygon: a seam-crossing ring in raw
-            # coordinates describes the COMPLEMENT region — shift both the
-            # ring and the points into continuous 0..360 space first (the
-            # reference's RasterGeolocation.resize shift trick,
-            # raster_geolocation.py:319-330, applied to PIP)
-            rx = np.where(rx < 0, rx + 360.0, rx)
-            px = np.where(px < 0, px + 360.0, px)
-        keep = ray_cast_inside(px, pdf["y"].to_numpy(), rx, ry)
-        return pdf.loc[keep, [f.name for f in out_schema.fields]]
-
-    # sharded kernel key (poly_id, pcell): a continent-sized polygon is
-    # split across its covered coarse cells instead of pinning one task
-    # (VERDICT r01 'What's wrong' #4) — the small ring replicates per
-    # shard, candidates are already cell-tagged, results union freely.
-    # MultiPolygon inputs carry a ``part`` column (one row per member
-    # ring, wrap_geometry.py:76-79): it joins the shard key so each
-    # kernel group still holds exactly ONE ring; membership in ANY part
-    # is the caller's distinct over (point, poly).
-    shard = ["poly_id", "pcell"] + (["part"] if "part" in cand.columns else [])
-    return cand.groupBy(*shard).applyInPandas(kernel, schema=out_schema)
+    if not bbox_only:
+        px = "CASE WHEN xmin > xmax AND x < 0 THEN x + 360.0D ELSE x END"
+        cand = cand.filter(ray_cast_inside_sql(px, "y", "ring"))
+    return cand.drop("ring", "is_rect", "pcell")
 
 
 def rasterize(
@@ -122,36 +131,22 @@ def rasterize(
 
     Candidate cells come from each polygon's bbox window (pure SQL
     sequence×explode), the exact test is cell-center-in-polygon via the
-    grouped ray-cast kernel.
+    ``ray_cast_inside_sql`` filter; the (row, col) merge is the plan's
+    only shuffle.
     """
     g = grid.grid_struct_sql(**target)
     w = grid.window_for_bbox_sql(g, grid.bbox_struct_sql("xmin", "ymin", "xmax", "ymax"))
-    cand = (
+    burned = (
         polygons.withColumn("win", F.expr(w))
         # guard BOTH oob and empty windows: Spark sequence(a, b) with a > b
         # silently generates a DESCENDING sequence, not an empty one
         .filter("(NOT win.oob AND win.row_end > win.row_start) AND win.col_end > win.col_start")
         .withColumn("row", F.expr("explode(sequence(win.row_start, win.row_end - 1))"))
         .withColumn("col", F.expr("explode(sequence(win.col_start, win.col_end - 1))"))
-        .select(
-            "poly_id", "ring", "burn_value", "row", "col",
-            F.expr(grid.cell_center_x_sql(g, "col")).alias("x"),
-            F.expr(grid.cell_center_y_sql(g, "row")).alias("y"),
-            # sharded kernel key: 256×256-cell blocks cap any polygon's
-            # per-task candidate count at 65k rows (VERDICT r01 #4)
-            F.expr("cast(row / 256 as bigint)").alias("rblk"),
-            F.expr("cast(col / 256 as bigint)").alias("cblk"),
-        )
+        .filter(ray_cast_inside_sql(
+            grid.cell_center_x_sql(g, "col"), grid.cell_center_y_sql(g, "row"), "ring"))
+        .select("poly_id", "burn_value", "row", "col")
     )
-
-    out_schema = "poly_id long, burn_value double, row long, col long"
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rx, ry = _ring_xy(pdf["ring"].iloc[0])
-        keep = ray_cast_inside(pdf["x"].to_numpy(), pdf["y"].to_numpy(), rx, ry)
-        return pdf.loc[keep, ["poly_id", "burn_value", "row", "col"]]
-
-    burned = cand.groupBy("poly_id", "rblk", "cblk").applyInPandas(kernel, schema=out_schema)
     if merge_alg == "add":
         return burned.groupBy("row", "col").agg(F.sum("burn_value").alias("value"))
     # replace: later shape (higher poly_id) wins — rasterio paints in order

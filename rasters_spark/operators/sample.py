@@ -239,7 +239,7 @@ _TILE_PAYLOAD = ("bytes", "w", "h", "fmt", "x_origin", "y_origin",
 #: shard rows (capped at MAX_SHARDS), so no single collect_list row —
 #: and no single kernel task — grows without bound with a hot tile's
 #: match count (VERDICT r04 weak #1). Measured honestly
-#: (tools/bench_skew_grouped.py, INTERLEAVED A/B): this is worst-case
+#: (BENCH.md round-5, INTERLEAVED A/B): this is worst-case
 #: PROTECTION, not a steady-state speedup — a 1.5M-match unsalted row
 #: still completes on a 4 GB heap while a ~2.5M-match one OOMs the
 #: JVM; sharding costs ~15-25% on uniform workloads (the counts
@@ -274,7 +274,7 @@ def _sharded_tile_agg(skinny: DataFrame, keep: list[str], payload: DataFrame,
     payload fanout, no extra kernel rows. The shard key hashes the
     point identity columns (deterministic murmur), never a random.
 
-    Cost (measured, tools/bench_skew_grouped.py, interleaved A/B):
+    Cost (measured on the round-5 grouped cogroup, interleaved A/B):
     worst-case PROTECTION, not a steady-state speedup — 0.94× on a
     30%-hot-tile workload, 0.77× uniform, and at a 3.6M-match tile the
     unsalted single-group buffer OOMs the 4 GiB JVM while the sharded
@@ -469,10 +469,7 @@ def sample_idw(joined: DataFrame, tiles: DataFrame | None = None,
 
 
 def sample_nearest_grouped(joined: DataFrame, tiles: DataFrame,
-                           value_name: str = "value",
-                           shard_target: int = SHARD_TARGET,
-                           max_shards: int = MAX_SHARDS,
-                           tile_counts: DataFrame | None = None) -> DataFrame:
+                           value_name: str = "value") -> DataFrame:
     """Nearest sampling for a HUGE point side — the same cogroup shape
     as sample_idw, specialized to O(1) pixel reads.
 
@@ -506,14 +503,11 @@ def sample_nearest_grouped(joined: DataFrame, tiles: DataFrame,
     pair), never copied or shipped. No per-group buffer exists at all,
     so the hot-tile OOM surface the r5 sharding protected against is
     gone by construction, and AQE skew-join splitting spreads a hot
-    tile's pairs natively. ``shard_target``/``max_shards``/
-    ``tile_counts`` are retained for API compatibility but no longer
-    used — there is no aggregate to shard. The join is pinned to
+    tile's pairs natively: there is no aggregate to shard. The join is pinned to
     SHUFFLE_HASH with the one-row-per-tile payload as build side:
     planner estimates must never choose to broadcast-collect blobs (or
     the matched pairs) through the driver — that serial build was the
     measured 2→8-core efficiency cliff (0.95 → 0.47) at 1M points."""
-    del shard_target, max_shards, tile_counts  # kept for API compatibility
     payload = tiles.select(
         F.col("image_id").alias("_img"), "bytes", "w", "h", "fmt",
         *[F.col(c).alias(c) for c in ("caption",) if c in tiles.columns])

@@ -60,6 +60,84 @@ def test_pip_convex_and_concave(spark):
     assert deep and all((i, 26) in gotset for i in deep)
 
 
+def _ray_cast_rings(rng):
+    """Rings for the SQL/numpy ray-cast property: random convex and
+    concave (star) rings, the fixture sliver, rings with horizontal
+    edges, and rings of 0 and 1 vertices."""
+    rings = []
+    for k in range(12):
+        n = int(rng.integers(3, 9))
+        ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+        cx, cy = rng.uniform(-50, 50, 2)
+        if k % 2:  # concave star: alternating radii
+            r = np.where(np.arange(n) % 2, rng.uniform(0.5, 1.5), rng.uniform(3, 5))
+        else:      # convex: points on a circle
+            r = np.full(n, rng.uniform(1, 5))
+        pts = list(zip(cx + r * np.cos(ang), cy + r * np.sin(ang)))
+        rings.append(pts + [pts[0]])
+    rings.append([(60.0, 0.0), (61.0, 0.001), (62.0, 0.0), (60.0, 0.0)])          # sliver
+    rings.append([(0.0, 0.0), (4.0, 0.0), (4.0, 3.0), (0.0, 3.0), (0.0, 0.0)])    # rect
+    rings.append([(0.0, 0.0), (6.0, 0.0), (6.0, 2.0), (4.0, 2.0), (4.0, 4.0),     # staircase
+                  (2.0, 4.0), (2.0, 6.0), (0.0, 6.0), (0.0, 0.0)])
+    rings.append([(0.0, 0.0), (4.0, 0.0), (2.0, 2.0), (4.0, 4.0), (0.0, 4.0),     # notch on
+                  (2.0, 2.0), (0.0, 0.0)])                                         # a vertex row
+    rings.append([(1.0, 1.0)])
+    rings.append([])
+    return [[(float(x), float(y)) for x, y in r] for r in rings]
+
+
+def test_ray_cast_sql_matches_numpy(spark):
+    """``ray_cast_inside_sql`` through ``F.expr`` equals the numpy
+    ``ray_cast_inside`` row for row, boundaries included: random points,
+    every vertex, edge midpoints, and points on each vertex's row."""
+    rng = np.random.default_rng(7)
+    rows, expect = [], []
+    for ring in _ray_cast_rings(rng):
+        rx = np.array([x for x, _ in ring], dtype=np.float64)
+        ry = np.array([y for _, y in ring], dtype=np.float64)
+        if len(ring):
+            lo, hi = rx.min() - 1, rx.max() + 1
+            px = list(rng.uniform(lo, hi, 40)) + list(rx) + list((rx[:-1] + rx[1:]) / 2)
+            py = list(rng.uniform(ry.min() - 1, ry.max() + 1, 40)) + list(ry) + list((ry[:-1] + ry[1:]) / 2)
+            for y in ry:  # horizontal rays through every vertex
+                px += list(np.linspace(lo, hi, 9))
+                py += [float(y)] * 9
+        else:
+            px, py = [0.0, 1.0], [0.0, 1.0]
+        px, py = np.array(px, dtype=np.float64), np.array(py, dtype=np.float64)
+        expect += list(joins.ray_cast_inside(px, py, rx, ry))
+        ring_rows = [{"x": x, "y": y} for x, y in ring]
+        rows += [(len(rows) + i, float(x), float(y), ring_rows) for i, (x, y) in enumerate(zip(px, py))]
+    df = spark.createDataFrame(rows, "i long, px double, py double, ring array<struct<x:double,y:double>>")
+    got = (df.select("i", F.expr(joins.ray_cast_inside_sql("px", "py", "ring")).alias("inside"))
+           .orderBy("i").toPandas())
+    assert len(got) == len(expect) and 0 < sum(expect) < len(expect)
+    assert got["inside"].tolist() == [bool(e) for e in expect]
+
+
+def test_wrapped_ring_pip_matches_numpy(spark):
+    """An antimeridian-wrapped non-rect ring through points_in_polygons
+    equals the numpy ray-cast on the 0..360-shifted ring and points."""
+    ring = [(179.0, 0.0), (-179.0, 0.5), (179.5, 1.0), (178.5, 0.5), (179.0, 0.0)]
+    polys = spark.createDataFrame(
+        [(1, [{"x": x, "y": y} for x, y in ring], False, 1.0, 178.5, 0.0, -179.0, 1.0)],
+        "poly_id long, ring array<struct<x double, y double>>, is_rect boolean, "
+        "burn_value double, xmin double, ymin double, xmax double, ymax double")
+    xs = np.concatenate([np.linspace(178.0, 179.99, 23), np.linspace(-180.0, -178.5, 17)])
+    ys = np.linspace(-0.1, 1.1, 13)
+    grid_pts = [(float(x), float(y)) for x in xs for y in ys] + [(x, y) for x, y in ring]
+    pts = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(grid_pts)], "point_id long, x double, y double")
+    got = {r.point_id for r in joins.points_in_polygons(pts, polys).collect()}
+    rx = np.array([x + 360.0 if x < 0 else x for x, _ in ring])
+    ry = np.array([y for _, y in ring])
+    px = np.array([x + 360.0 if x < 0 else x for x, _ in grid_pts])
+    keep = joins.ray_cast_inside(px, np.array([y for _, y in grid_pts]), rx, ry)
+    expect = set(np.flatnonzero(keep).tolist())
+    assert expect and any(grid_pts[i][0] < 0 for i in expect)  # both seam sides
+    assert got == expect
+
+
 def test_rasterize_matches_numpy_burn(spark):
     polys = load_polygons(spark, SF).filter("is_rect")
     target = dict(x_origin=-180.0, y_origin=90.0, cell_width=0.5, cell_height=-0.5,
@@ -134,7 +212,7 @@ def test_knn_matches_bruteforce_within_radius(spark):
 
 def test_rasterize_huge_polygon_sharded(spark):
     # one polygon covering >1e5 candidate cells must still burn exactly
-    # (the kernel key shards by 256x256 block so no single task holds it)
+    # (its cells spread over the explode's tasks; no per-polygon group)
     ring = [{"x": 0.0, "y": 0.0}, {"x": 4.0, "y": 0.0}, {"x": 4.0, "y": 4.0},
             {"x": 0.0, "y": 4.0}, {"x": 0.0, "y": 0.0}]
     polys = spark.createDataFrame(

@@ -6,7 +6,8 @@ method calls of one warm build are counted. Each Column-DSL operator is
 its own JVM round trip, one ``F.expr`` over SQL text is one call, so a
 ceiling well under the DSL count pins the text-built plans. The final
 (post-AQE) physical plans of the point-sample queries must keep their
-round-6 shapes.
+round-6 shapes, and the polygon joins must refine in the JVM (no
+Python node).
 """
 
 import os
@@ -20,11 +21,11 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 from plan_fingerprint import QUERIES, bench_queries, count_jvm_calls  # noqa: E402
 
 # about 2x the JVM calls one warm build makes at sf0.001 (flagship 120,
-# grouped 158, knn 70, chunk 163, pip 79, zonal 124, rasterize 111,
+# grouped 158, knn 70, chunk 163, pip 42, zonal 124, rasterize 38,
 # bilinear 151); the Column-DSL builds made 815, 853, 861, 972, 1167,
-# 413, 865 and 1497
+# 413, 865 and 1497, and pip/rasterize with their Arrow kernels 79/111
 JVM_CALL_CEILING = {"flagship": 240, "grouped": 320, "knn": 140, "chunk": 330,
-                    "pip": 160, "zonal": 250, "rasterize": 220, "bilinear": 300}
+                    "pip": 90, "zonal": 250, "rasterize": 80, "bilinear": 300}
 
 
 @pytest.fixture(scope="module")
@@ -72,3 +73,17 @@ def test_knn_window_group_limit(builders):
     plan = _final_plan(builders["knn"]())
     # per-task partial top-k below the exchange, final top-k above it
     assert re.findall(r"WindowGroupLimit .*, (Partial|Final)", plan) == ["Final", "Partial"]
+
+
+def test_pip_one_broadcast_stage_no_python(builders):
+    plan = _final_plan(builders["pip"]())
+    assert "BroadcastHashJoin" in plan
+    assert _shuffles(plan) == 0
+    assert not re.search(r"Python|InPandas|InArrow", plan)
+
+
+def test_rasterize_one_shuffle_no_python(builders):
+    plan = _final_plan(builders["rasterize"]())
+    # the (row, col) merge aggregate is the only exchange
+    assert _shuffles(plan) == 1
+    assert not re.search(r"Python|InPandas|InArrow", plan)

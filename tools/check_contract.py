@@ -4,6 +4,10 @@ Runs every __spark_entry__.queries() entry at sf0.01 Spark-side AND its
 oracle_sql() DuckDB-side, compares row count, column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted by
 stringified tuple). Usage: python tools/check_contract.py [names...]
+
+A ``DTYPE <name>: <col> spark=<cls> duck=<cls>`` line reports a column
+whose value class (int, float, string, bool, binary, list) differs
+between the engines; it does not change the entry's PASS/FAIL.
 """
 
 from __future__ import annotations
@@ -37,6 +41,36 @@ def norm_cell(v):
     if isinstance(v, (list, np.ndarray)):
         return "[" + ",".join(norm_cell(x) for x in v) + "]"
     return str(v)
+
+
+def dtype_class(col: pd.Series) -> str:
+    """Coarse value class of a result column: int, float, string, bool,
+    binary, list (or the Python type name of anything else). An object
+    column is classed by its first non-null value."""
+    kind = col.dtype.kind
+    if kind in "biuf":
+        return {"b": "bool", "i": "int", "u": "int", "f": "float"}[kind]
+    v = next((x for x in col if x is not None and not (isinstance(x, float) and np.isnan(x))), None)
+    if v is None:
+        return "null"
+    for cls, types in (("bool", (bool, np.bool_)), ("int", (int, np.integer)),
+                       ("float", (float, np.floating)), ("string", (str,)),
+                       ("binary", (bytes, bytearray)), ("list", (list, tuple, np.ndarray))):
+        if isinstance(v, types):
+            return cls
+    return type(v).__name__
+
+
+def dtype_mismatches(got: pd.DataFrame, exp: pd.DataFrame) -> list[tuple[str, str, str]]:
+    """(column, spark class, duckdb class) for every shared column whose
+    value class differs -- a type-only difference the value hash cannot
+    see (``norm_cell`` prints an integral float as an int)."""
+    out = []
+    for c in sorted(set(got.columns) & set(exp.columns)):
+        a, b = dtype_class(got[c]), dtype_class(exp[c])
+        if a != b and "null" not in (a, b):
+            out.append((c, a, b))
+    return out
 
 
 def frame_hash(df: pd.DataFrame) -> str:
@@ -76,6 +110,8 @@ def main(only: list[str]) -> int:
             print(f"FAIL {name}: oracle error: {ex}", flush=True)
             failures += 1
             continue
+        for col, a, b in dtype_mismatches(got, exp):
+            print(f"DTYPE {name}: {col} spark={a} duck={b}", flush=True)
         problems = []
         if len(got) != len(exp):
             problems.append(f"rows {len(got)} != {len(exp)}")
